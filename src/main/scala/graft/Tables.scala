@@ -56,8 +56,12 @@ object Tables {
     * size); single-row-group files can defeat the bytes term (splits
     * beyond the one row group come up empty), which errs toward skipping
     * the fan-out — the conservative side (no standing payload shuffle).
-    * NonFatal only: an OOM/Interrupted must propagate, not silently
-    * degrade into a repartition decision. */
+    * The bytes term applies only when the size is KNOWN: a relation
+    * Spark cannot size (a DSv2 scan without statistics) reports
+    * `spark.sql.defaultSizeInBytes`, which would saturate the term and
+    * silently disable the fan-out — such frames fall back to the file
+    * count. NonFatal only: an OOM/Interrupted must propagate, not
+    * silently degrade into a repartition decision. */
   private def scanParallelism(df: DataFrame): Int =
     try {
       val nFiles = df.inputFiles.length
@@ -66,7 +70,8 @@ object Tables {
           .get("spark.sql.files.maxPartitionBytes", "128MB"))
       val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
       val bySize =
-        (bytes / maxSplit).min(BigInt(Int.MaxValue)).toInt
+        if (bytes >= df.sparkSession.sessionState.conf.defaultSizeInBytes) 0
+        else (bytes / maxSplit).min(BigInt(Int.MaxValue)).toInt
       math.max(nFiles, bySize)
     } catch { case scala.util.control.NonFatal(_) => 0 }
 
@@ -103,7 +108,7 @@ object Tables {
     * counts over enum-grade keys: order status, return flag, language —
     * cardinality independent of corpus size), `coalesce(1) +
     * sortWithinPartitions` produces the IDENTICAL row sequence (same
-    * comparator, total keys, one partition = global order) with no
+    * comparator, one partition = global order) with no
     * sampling job and no range exchange; the single task sorts a handful
     * of rows at ANY corpus scale, and the upstream aggregation keeps its
     * parallelism (partial aggregates are unaffected; only the final,
@@ -113,7 +118,12 @@ object Tables {
     * change feeds: those keep the distributed range sort (a single-task
     * sort of a billion rows is the straggler shape §2 exists to kill).
     * Callers assert that the output is report-sized BY CONSTRUCTION
-    * (bounded group cardinality), not just small at the test SF. */
+    * (bounded group cardinality), not just small at the test SF.
+    *
+    * The row sequence is identical only when the sort keys are UNIQUE
+    * per row: rows that tie on every key come out in arrival order,
+    * which differs between the two plans (as it does between two runs
+    * of `orderBy`). */
   def reportSort(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
     df.coalesce(1).sortWithinPartitions(keys: _*)
 
@@ -122,9 +132,9 @@ object Tables {
     * output (same row sequence — see [[reportSort]]'s contract). */
   implicit class ReportSortSyntax(private val df: DataFrame) {
     def reportSort(key: String, keys: String*): DataFrame =
-      df.coalesce(1).sortWithinPartitions(key, keys: _*)
+      Tables.reportSort(df, (key +: keys).map(col): _*)
     def reportSort(keys: org.apache.spark.sql.Column*): DataFrame =
-      df.coalesce(1).sortWithinPartitions(keys: _*)
+      Tables.reportSort(df, keys: _*)
   }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {

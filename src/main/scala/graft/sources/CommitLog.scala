@@ -1180,12 +1180,53 @@ object CommitLog {
         .flatMap(v => readCommitFile(spark, root, v)).headOption)
   }
 
+  /** `spark.read.parquet(paths)` without its one-task schema-inference
+    * job: the schema comes from the footer of the file Spark's inference
+    * would pick — the lexicographically first non-hidden data file
+    * (`ParquetUtils.splitFiles`) — read on the driver and converted under
+    * the session's parquet settings. Commit-log dirs are immutable, so
+    * that footer is the answer. A layout the shortcut does not mirror (a
+    * missing path, a glob, a nested dir, a summary file, an unreadable
+    * footer) takes the inferring call, so errors read as before. */
+  private[graft] def readParquet(spark: SparkSession,
+      paths: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footerSchema(): Option[org.apache.spark.sql.types.StructType] = {
+      if (paths.exists(_.exists("{}[]*?\\".contains(_)))) return None
+      val visible = paths.flatMap { p =>
+        val hp = new HPath(p)
+        hp.getFileSystem(conf).listStatus(hp).toSeq
+      }.filterNot { st =>
+        val n = st.getPath.getName
+        ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")) &&
+          !n.startsWith("_metadata") && !n.startsWith("_common_metadata")
+      }
+      if (visible.isEmpty || visible.exists(st =>
+          st.isDirectory || st.getPath.getName.startsWith("_"))) return None
+      val first = visible.minBy(_.getPath.toString)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first, conf))
+      val footer = try r.getFooter finally r.close()
+      Some(ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(first.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    }
+    scala.util.Try(footerSchema()).toOption.flatten match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+  }
+
   /** Read `dirs` as one frame. When the commit RECORDS a table schema
     * (additive evolution happened — r12), the read pins it: parquet fills
     * columns a pre-evolution directory lacks with typed NULLs, exactly the
     * q_source_evolved union semantics, WITHOUT the per-file footer-merge
     * pass `mergeSchema` would pay — the log already knows the answer.
-    * Schema-less commits (the common case) read footer-first as before. */
+    * Schema-less commits (the common case) pin the first footer's schema
+    * ([[readParquet]]) — the one Spark's inference would pick. */
   private def readDirs(spark: SparkSession, root: String,
       schemaDDL: Option[String], colMap: Map[String, String],
       dirs: Seq[String], withPos: Boolean = false): DataFrame = {
@@ -1223,7 +1264,7 @@ object CommitLog {
       case None =>
         // a nonEmpty colMap always travels with a recorded DDL (the
         // activating verb records both) — footer-first otherwise
-        var df = spark.read.parquet(paths: _*)
+        var df = readParquet(spark, paths)
         if (withPos) df = df
           .withColumn(DvPathCol, col("_metadata.file_path"))
           .withColumn(DvPosCol, col("_metadata.row_index"))
@@ -1281,7 +1322,7 @@ object CommitLog {
     val oldNames = dirs.flatMap(head.dv.get).distinct
     if (oldNames.isEmpty) newPos
     else newPos.unionByName(
-      spark.read.parquet(oldNames.map(n => dvPath(root, n).toString): _*)
+      readParquet(spark, oldNames.map(n => dvPath(root, n).toString))
         .filter(dirOfPath(col("path")).isin(dirs: _*))
         .select(relPath(col("path")).as("path"), col("pos")))
   }
@@ -1388,16 +1429,6 @@ object CommitLog {
       }: _*)
     }
 
-  /** [[dirStats]] over a PHYSICAL-named staged dir, keyed back to the
-    * logical column names the commit records. */
-  private def dirStatsLogical(spark: SparkSession, path: String,
-      cols: Seq[String], colMap: Map[String, String]): Map[String, (Long, Long)] = {
-    if (colMap.isEmpty) return dirStats(spark, path, cols)
-    val phys = cols.map(c => colMap.getOrElse(c, c))
-    val m = dirStats(spark, path, phys)
-    cols.zip(phys).flatMap { case (l, p) => m.get(p).map(l -> _) }.toMap
-  }
-
   /** The version a dir/vector name embeds (`…-v<N>`): the claim target
     * it was staged for — what existence defaults and vacuum's sweep
     * rule key on. None for foreign names (read as stored; every
@@ -1499,8 +1530,7 @@ object CommitLog {
       var df = readDirs(spark, root, c.schemaDDL, c.colMap, ds,
         withPos = needPos)
       if (names.nonEmpty) {
-        val dv = spark.read
-          .parquet(names.map(n => dvPath(root, n).toString): _*)
+        val dv = readParquet(spark, names.map(n => dvPath(root, n).toString))
         // both sides relativize (ADVICE r16): the scan's file_path is
         // absolute under WHATEVER spelling this reader used; the vector
         // stores `dir/file`. Comparing the relativized forms makes the
@@ -1527,45 +1557,23 @@ object CommitLog {
   def readLatest(spark: SparkSession, root: String): Option[DataFrame] =
     latest(spark, root).map(c => load(spark, root, c))
 
-  /** Per-column [min, max] (cast to long) over one staged directory, for
-    * every column in `cols`, in ONE column-pruned scan (r13: the agg list
-    * carries 2·|cols| exprs — still a single pass over the new data).
-    * Columns empty/all-null in the dir are absent from the map — which
-    * reads as "no stats for that column, always scan". Production harvests
-    * parquet footer min/max instead — free at write time; the commit shape
-    * and read path are identical. */
-  private def dirStats(spark: SparkSession, path: String,
-      cols: Seq[String]): Map[String, (Long, Long)] = {
-    if (cols.isEmpty) return Map.empty
-    val df = spark.read.parquet(path)
-    val types = df.schema.map(f => f.name -> f.dataType).toMap
-    val aggs = cols.flatMap { c =>
-      val e = statDomain(col(c), types.get(c))
-      Seq(min(e), max(e))
-    }
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    cols.zipWithIndex.flatMap { case (c, i) =>
-      if (r.isNullAt(2 * i) || r.isNullAt(2 * i + 1)) None
-      else Some(c -> (r.getLong(2 * i), r.getLong(2 * i + 1)))
-    }.toMap
-  }
-
   /** Per-FILE [min, max] over one staged directory (r18 — VERDICT r17
     * #6, the Delta AddFile-stats shape at file granularity): keyed
-    * `dir/fileName` → col → range in the TYPED stat domain, ONE grouped
-    * scan of the new dir ([[dirStats]]'s agg list GROUPed BY
+    * `dir/fileName` → LOGICAL col → range in the TYPED stat domain, ONE
+    * column-pruned scan of the new dir (the agg list carries 2·|cols|
+    * exprs over the dir's PHYSICAL names, GROUPed BY
     * `_metadata.file_name`). The collect is bounded by the dir's file
     * count (≤ targetFiles for compacts, the write's partition count for
     * appends). Columns all-null in a file are absent for that file —
-    * "no stats, always read". Production harvests parquet footers at
-    * write time instead; the commit shape and read path are identical. */
+    * "no stats, always read". */
   private def dirFileStats(spark: SparkSession, path: String,
-      dirName: String, cols: Seq[String])
+      dirName: String, cols: Seq[String], colMap: Map[String, String])
       : Map[String, Map[String, (Long, Long)]] = {
     if (cols.isEmpty) return Map.empty
-    val df = spark.read.parquet(path)
+    val phys = cols.map(c => colMap.getOrElse(c, c))
+    val df = readParquet(spark, Seq(path))
     val types = df.schema.map(f => f.name -> f.dataType).toMap
-    val aggs = cols.flatMap { c =>
+    val aggs = phys.flatMap { c =>
       val e = statDomain(col(c), types.get(c))
       Seq(min(e), max(e))
     }
@@ -1580,17 +1588,27 @@ object CommitLog {
     }.filter(_._2.nonEmpty).toMap
   }
 
-  /** [[dirFileStats]] over a PHYSICAL-named staged dir, keyed back to
-    * the logical column names the commit records. */
-  private def dirFileStatsLogical(spark: SparkSession, path: String,
-      dirName: String, cols: Seq[String], colMap: Map[String, String])
-      : Map[String, Map[String, (Long, Long)]] = {
-    if (colMap.isEmpty) return dirFileStats(spark, path, dirName, cols)
-    val phys = cols.map(c => colMap.getOrElse(c, c))
-    dirFileStats(spark, path, dirName, phys).map { case (df, byCol) =>
-      df -> cols.zip(phys).flatMap { case (l, p) =>
-        byCol.get(p).map(l -> _) }.toMap
-    }.filter(_._2.nonEmpty)
+  /** Commit statistics of freshly staged `dirs`, keyed by the LOGICAL
+    * names the commit records: per-dir [min, max] (dirs with no range
+    * for any column are absent — "always scan"), per-file ranges
+    * ([[dirFileStats]]) and exact row counts ([[dirRowCount]]). The
+    * per-dir range is folded on the driver from the per-file ones — the
+    * smallest file min and the largest file max, exactly what a dir-wide
+    * aggregate returns — so each dir pays one grouped scan. */
+  private[graft] def stagedStats(spark: SparkSession, root: String,
+      dirs: Seq[String], cols: Seq[String], colMap: Map[String, String])
+      : (Map[String, Map[String, (Long, Long)]],
+         Map[String, Map[String, (Long, Long)]], Map[String, Long]) = {
+    val perDir = dirs.map(d =>
+      d -> dirFileStats(spark, s"$root/$d", d, cols, colMap))
+    val byDir = perDir.map { case (d, files) =>
+      d -> cols.flatMap { c =>
+        val rs = files.values.flatMap(_.get(c))
+        if (rs.isEmpty) None else Some(c -> (rs.map(_._1).min, rs.map(_._2).max))
+      }.toMap
+    }.filter(_._2.nonEmpty).toMap
+    (byDir, perDir.flatMap(_._2).toMap,
+      dirs.map(d => d -> dirRowCount(spark, s"$root/$d")).toMap)
   }
 
   /** EXACT row count of one staged directory from its parquet FOOTERS
@@ -1798,7 +1816,7 @@ object CommitLog {
     * Anything else keeps the legacy cast (null ⇒ no stats recorded).
     * The JVM twin is [[CommitLogSource.encodeStringStat]]; the two MUST
     * agree byte-for-byte or pruning would be unsound. */
-  private def statDomain(c: org.apache.spark.sql.Column,
+  private[graft] def statDomain(c: org.apache.spark.sql.Column,
       dt: Option[org.apache.spark.sql.types.DataType])
       : org.apache.spark.sql.Column = {
     import org.apache.spark.sql.types._
@@ -2054,7 +2072,7 @@ object CommitLog {
               case None => return None
             }
             if (!f.exists(p)) return None
-            pieces += spark.read.parquet(p.toString)
+            pieces += readParquet(spark, Seq(p.toString))
               .withColumn("_commit_version", lit(c.version))
           }
           prev = c
@@ -3547,15 +3565,8 @@ object CommitLog {
           Seq(d -> Nil)
         }
       }
-      val st = staged.map { case (d, _) =>
-        d -> dirStats(spark, s"$root/$d", statsCols)
-      }.filter(_._2.nonEmpty).toMap
-      val byFile = staged.flatMap { case (d, _) =>
-        if (st.getOrElse(d, Map.empty).isEmpty) Nil
-        else dirFileStats(spark, s"$root/$d", d, statsCols)
-      }.toMap
-      val rowsNew = staged.map { case (d, _) =>
-        d -> dirRowCount(spark, s"$root/$d") }.toMap
+      val (st, byFile, rowsNew) =
+        stagedStats(spark, root, staged.map(_._1), statsCols, Map.empty)
       val c = Commit(nextV, staged.map(_._1), writer,
         if (createOnEmpty && cur.isEmpty) "create" else action,
         st, rowInvisible,
@@ -3783,20 +3794,8 @@ object CommitLog {
     var deltaDirs = stageDelta()
     def deleteStaged(): Unit =
       deltaDirs.foreach(dn => f.delete(new HPath(s"$root/${dn._1}"), true))
-    def statsOfStaged(): (Map[String, Map[String, (Long, Long)]],
-        Map[String, Map[String, (Long, Long)]], Map[String, Long]) = {
-      val byCol = deltaDirs.map { case (d, _) =>
-        d -> dirStatsLogical(spark, s"$root/$d", statsCols, stagedMap)
-      }.filter(_._2.nonEmpty).toMap
-      val byFile = deltaDirs.flatMap { case (d, _) =>
-        if (byCol.getOrElse(d, Map.empty).isEmpty) Nil
-        else dirFileStatsLogical(spark, s"$root/$d", d, statsCols, stagedMap)
-      }.toMap
-      // exact per-dir row counts (r19): driver-side parquet footer reads
-      val rc = deltaDirs.map { case (d, _) =>
-        d -> dirRowCount(spark, s"$root/$d") }.toMap
-      (byCol, byFile, rc)
-    }
+    def statsOfStaged() =
+      stagedStats(spark, root, deltaDirs.map(_._1), statsCols, stagedMap)
     var (deltaStats, deltaByFile, deltaRows) = statsOfStaged()
     var attempt = 0
     while (attempt < maxAttempts) {
@@ -4151,11 +4150,8 @@ object CommitLog {
               head.colMap.getOrElse(bc, bc), fpp = 0.001,
               sidecarPathFor(root, legacySb, bc, nd)) })
       }
-      val newStats = newDirs.map { case (nd, _) =>
-        nd -> dirStatsLogical(spark, s"$root/$nd", effCols, head.colMap)
-      }.filter(_._2.nonEmpty).toMap
-      val newRows = newDirs.map { case (nd, _) =>
-        nd -> dirRowCount(spark, s"$root/$nd") }.toMap
+      val (newStats, newFstats, newRows) =
+        stagedStats(spark, root, newDirs.map(_._1), effCols, head.colMap)
       val allStats = head.stats
         .filter { case (d, _) => carried.contains(d) } ++ newStats
       val c = Commit(nextV, carried ++ newDirs.map(_._1), writer,
@@ -4175,11 +4171,7 @@ object CommitLog {
         colMap = head.colMap,
         statsTyped = head.statsTyped.intersect(carried.toSet) ++
           newStats.keySet,
-        fstats = carryFstats(head.fstats, carried) ++
-          newDirs.flatMap { case (nd, _) =>
-            if (newStats.getOrElse(nd, Map.empty).isEmpty) Nil
-            else dirFileStatsLogical(spark, s"$root/$nd", nd,
-              effCols, head.colMap) }.toMap,
+        fstats = carryFstats(head.fstats, carried) ++ newFstats,
         partitionBy = head.partitionBy,
         partVals = head.partVals.filter { case (d, _) =>
           carried.contains(d) } ++
@@ -4409,10 +4401,11 @@ object CommitLog {
   private def buildSidecarAt(spark: SparkSession, root: String, d: String,
       colName: String, fpp: Double, p: HPath): Unit = {
     val f = fs(spark, root)
-    val df = spark.read.parquet(s"$root/$d")
+    val df = readParquet(spark, Seq(s"$root/$d"))
     require(df.columns.contains(colName),
       s"bloom column '$colName' not in ${df.schema.simpleString}")
-    val n = df.count()
+    // footer row count: the df.count() total without its Spark job
+    val n = dirRowCount(spark, s"$root/$d")
     // empty dir: the bloom aggregation yields a null buffer (NPE on
     // readFrom), and a no-evidence empty dir scans for free anyway
     if (n == 0) return
@@ -5019,13 +5012,8 @@ object CommitLog {
             attemptMap.getOrElse(k, k), fpp = 0.001,
             sidecarPathFor(root, legacySb, k, newDir)))
       }
-      val newByCol =
-        if (stageData) dirStatsLogical(spark, s"$root/$newDir", effStatsCols,
-          attemptMap)
-        else Map.empty[String, (Long, Long)]
-      val newStats =
-        if (newByCol.nonEmpty) Map(newDir -> newByCol)
-        else Map.empty[String, Map[String, (Long, Long)]]
+      val (newStats, newFstats, newRows) = stagedStats(spark, root,
+        if (stageData) Seq(newDir) else Nil, effStatsCols, attemptMap)
       val carried = cur.map(_.stats).getOrElse(Map.empty)
         .filter { case (d, _) => dirs.contains(d) }
       val allStats = carried ++ newStats
@@ -5057,22 +5045,16 @@ object CommitLog {
         defaults = cur.map(_.defaults).getOrElse(Nil),
         colMap = attemptMap,
         statsTyped = cur.map(_.statsTyped).getOrElse(Set.empty)
-          .intersect(commitDirs.toSet) ++
-          (if (newByCol.nonEmpty) Set(newDir) else Set.empty),
+          .intersect(commitDirs.toSet) ++ newStats.keySet,
         fstats = carryFstats(cur.map(_.fstats).getOrElse(Map.empty), dirs) ++
-          (if (newByCol.isEmpty) Map.empty
-           else dirFileStatsLogical(spark, s"$root/$newDir", newDir,
-             effStatsCols, attemptMap)),
+          newFstats,
         partitionBy = cur.map(_.partitionBy).getOrElse(Nil),
         // the merged output dir carries no partition identity (kept by
         // every partition filter — conservative); carried dirs ride
         partVals = cur.map(_.partVals).getOrElse(Map.empty)
           .filter { case (d, _) => dirs.contains(d) },
         rows = cur.map(_.rows).getOrElse(Map.empty)
-          .filter { case (d, _) => dirs.contains(d) } ++
-          (if (stageData)
-            Map(newDir -> dirRowCount(spark, s"$root/$newDir"))
-          else Map.empty),
+          .filter { case (d, _) => dirs.contains(d) } ++ newRows,
         // touched dirs' vectored share changed without a per-dir count
         // in hand — drop their entries (their statistics degrade to the
         // size estimate, never to a wrong exact count)
@@ -5416,11 +5398,8 @@ object CommitLog {
               sidecarPathFor(root, legacySb, bc, newDir)))
         }
         val effCols = head.statsCols
-        val newByCol = dirStatsLogical(spark, s"$root/$newDir", effCols,
-          head.colMap)
-        val newStats =
-          if (newByCol.nonEmpty) Map(newDir -> newByCol)
-          else Map.empty[String, Map[String, (Long, Long)]]
+        val (newStats, newFstats, newRows) =
+          stagedStats(spark, root, Seq(newDir), effCols, head.colMap)
         val c = Commit(nextV, head.dataDirs :+ newDir, writer, "update",
           head.stats ++ newStats,
           statsCols = if ((head.stats ++ newStats).nonEmpty) effCols else Nil,
@@ -5431,17 +5410,13 @@ object CommitLog {
           clusterBy = head.clusterBy,
           defaults = head.defaults,
           colMap = head.colMap,
-          statsTyped = head.statsTyped ++
-            (if (newByCol.nonEmpty) Set(newDir) else Set.empty),
-          fstats = head.fstats ++
-            (if (newByCol.isEmpty) Map.empty
-             else dirFileStatsLogical(spark, s"$root/$newDir", newDir,
-               effCols, head.colMap)),
+          statsTyped = head.statsTyped ++ newStats.keySet,
+          fstats = head.fstats ++ newFstats,
           partitionBy = head.partitionBy,
           // the post-image dir carries no partition identity (kept by
           // every partition filter — conservative); existing entries ride
           partVals = head.partVals,
-          rows = head.rows + (newDir -> dirRowCount(spark, s"$root/$newDir")),
+          rows = head.rows ++ newRows,
           // same unknown-stays-unknown rule as the delete fold (code
           // review r19): never seed a dv-bearing dir's count at 0
           dvRows = head.dvRows ++ touchedCounts.collect {
@@ -5680,11 +5655,8 @@ object CommitLog {
               head.colMap.getOrElse(bc, bc), fpp = 0.001,
               sidecarPathFor(root, legacySb, bc, nd)) })
       }
-      val newStats = newDirs.map { case (nd, _) =>
-        nd -> dirStatsLogical(spark, s"$root/$nd", effCols, head.colMap)
-      }.filter(_._2.nonEmpty).toMap
-      val newRows = newDirs.map { case (nd, _) =>
-        nd -> dirRowCount(spark, s"$root/$nd") }.toMap
+      val (newStats, newFstats, newRows) =
+        stagedStats(spark, root, newDirs.map(_._1), effCols, head.colMap)
       val allStats = head.stats
         .filter { case (d, _) => carried.contains(d) } ++ newStats
       val c = Commit(nextV, carried ++ newDirs.map(_._1), writer, action,
@@ -5701,11 +5673,7 @@ object CommitLog {
         colMap = head.colMap,
         statsTyped = head.statsTyped.intersect(carried.toSet) ++
           newStats.keySet,
-        fstats = carryFstats(head.fstats, carried) ++
-          newDirs.flatMap { case (nd, _) =>
-            if (newStats.getOrElse(nd, Map.empty).isEmpty) Nil
-            else dirFileStatsLogical(spark, s"$root/$nd", nd,
-              effCols, head.colMap) }.toMap,
+        fstats = carryFstats(head.fstats, carried) ++ newFstats,
         partitionBy = head.partitionBy,
         partVals = head.partVals.filter { case (d, _) =>
           carried.contains(d) } ++

@@ -573,7 +573,13 @@ private[graft] final class IndexMicroBatchStream(dir: String, buckets: Int,
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[IndexSegOffset].maxSeg
-    val fresh = segFiles().map(_._3)
+    // a seg dir vanishing mid-walk is a retried segment's overwrite in
+    // flight: report no new data this poll (the next one sees the
+    // re-landed dir) instead of failing the query
+    val listed =
+      try segFiles()
+      catch { case _: java.io.FileNotFoundException => return start }
+    val fresh = listed.map(_._3)
       .filter(seg => seg > s && availableNowEnd.forall(seg <= _))
       .distinct.sorted
     val admitted = limit match {

@@ -4620,4 +4620,135 @@ class CommitLogSpec extends SparkSpec {
     assert(CommitLog.readLatest(spark, root).get.columns.toSeq ==
       Seq("id2", "v"))
   }
+
+  /** Spark jobs launched from this thread while `body` runs. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      org.apache.spark.ListenerBridge.drain(sc)
+      (out, n.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
+
+  test("footer schema equals Spark's inferred schema, types and dir choice included") {
+    import spark.implicits._
+    val root = freshRoot()
+    val typed = Seq((1L, "a", Array[Byte](1, 2), BigDecimal("12.34"),
+        java.sql.Date.valueOf("2024-01-02"),
+        java.sql.Timestamp.valueOf("2024-01-02 03:04:05"),
+        java.time.LocalDateTime.parse("2024-01-02T03:04:05"),
+        Seq(1L, 2L), Map("k" -> 1)),
+      (2L, null, null, null, null, null, null, null, null))
+      .toDF("id", "s", "b", "dec", "d", "ts", "ntz", "arr", "m")
+      .withColumn("dec", col("dec").cast("decimal(12,2)"))
+      .withColumn("st", struct(col("id").as("x"),
+        struct(col("s").as("y")).as("inner")))
+    typed.repartition(2).write.parquet(s"$root/data-typed")
+    val p = Seq(s"$root/data-typed")
+    val mine = CommitLog.readParquet(spark, p)
+    assert(mine.schema == spark.read.parquet(p: _*).schema, mine.schema.treeString)
+    assert(mine.schema("ntz").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    def shown(df: org.apache.spark.sql.DataFrame) =
+      rows(df.withColumn("b", hex(col("b"))).orderBy("id"))
+    assert(shown(mine) == shown(spark.read.parquet(p: _*)))
+    // two dirs, two schemas: Spark infers from the lexicographically first
+    // file path — NOT the first path given — and so must the helper
+    Seq((1L, "x")).toDF("id", "x").write.parquet(s"$root/data-b")
+    Seq((2L, 7)).toDF("id", "y").write.parquet(s"$root/data-a")
+    for (two <- Seq(Seq(s"$root/data-b", s"$root/data-a"),
+        Seq(s"$root/data-a", s"$root/data-b")))
+      assert(CommitLog.readParquet(spark, two).schema ==
+        spark.read.parquet(two: _*).schema)
+    assert(CommitLog.readParquet(spark, Seq(s"$root/data-b", s"$root/data-a"))
+      .columns.toSeq == Seq("id", "y"))
+    // no file to read a footer from: the inferring call's own error
+    val e = intercept[Exception] {
+      CommitLog.readParquet(spark, Seq(s"$root/missing")) }
+    assert(e.getMessage.contains("missing"), e.getMessage)
+  }
+
+  test("folded dir stats equal a direct min/max aggregate in the stat domain") {
+    import spark.implicits._
+    val root = freshRoot()
+    def direct(dir: String, cols: Seq[(String, String)]) = {
+      val df = spark.read.parquet(s"$root/$dir")
+      val aggs = cols.flatMap { case (_, p) =>
+        val e = CommitLog.statDomain(col(p), Some(df.schema(p).dataType))
+        Seq(min(e), max(e))
+      }
+      val r = df.agg(aggs.head, aggs.tail: _*).head()
+      cols.zipWithIndex.collect { case ((l, _), i) if !r.isNullAt(2 * i) =>
+        l -> (r.getLong(2 * i), r.getLong(2 * i + 1)) }.toMap
+    }
+    val data = (1 to 40).map(i => (i.toLong * 37 % 101, s"k${100 - i}",
+      java.sql.Date.valueOf(s"2024-01-${1 + i % 28}"),
+      java.sql.Timestamp.valueOf(s"2024-02-01 00:00:${10 + i}"),
+      Option.empty[Long]))
+      .toDF("id", "s", "d", "ts", "none")
+    data.repartition(4).write.parquet(s"$root/data-many")
+    data.limit(0).write.parquet(s"$root/data-empty")
+    // column-mapped: physical names on disk, logical names in the commit
+    data.toDF("c1", "c2", "c3", "c4", "c5").repartition(3)
+      .write.parquet(s"$root/data-mapped")
+    val cols = Seq("id", "s", "d", "ts", "none")
+    val (byDir, byFile, rowsBy) = CommitLog.stagedStats(spark, root,
+      Seq("data-many", "data-empty"), cols, Map.empty)
+    val want = direct("data-many", cols.map(c => c -> c))
+    assert(want.keySet == Set("id", "s", "d", "ts"), want)
+    assert(byDir == Map("data-many" -> want), byDir)
+    assert(byFile.keys.forall(_.startsWith("data-many/")) && byFile.size == 4,
+      byFile.keys)
+    assert(rowsBy == Map("data-many" -> 40L, "data-empty" -> 0L))
+    val colMap = cols.zip(Seq("c1", "c2", "c3", "c4", "c5")).toMap
+    val (mapped, mappedFiles, _) = CommitLog.stagedStats(spark, root,
+      Seq("data-mapped"), cols, colMap)
+    assert(mapped == Map("data-mapped" -> direct("data-mapped", colMap.toSeq)))
+    assert(mapped("data-mapped") == want)
+    assert(mappedFiles.values.forall(_.keySet.subsetOf(cols.toSet)))
+  }
+
+  test("commit-log reads plan without Spark jobs; an append pays its write plus one stats query") {
+    import spark.implicits._
+    val root = freshRoot() + "/t"
+    def batch(lo: Long) = (lo until lo + 20).map(i => (i, s"v$i")).toDF("id", "v")
+    CommitLog.commitAppend(spark, root, "w", "append", statsCol = Some("id"),
+      createOnEmpty = true)(batch(0))
+    CommitLog.commitAppend(spark, root, "w", "append",
+      statsCol = Some("id"))(batch(20))
+    CommitLog.merge(spark, root, "m", "id", Seq((3L, "x")).toDF("id", "v"))
+    CommitLog.delete(spark, root, "d", col("id") === 25L)
+    val head = CommitLog.latest(spark, root).get
+    assert(head.dv.nonEmpty, "the delete lands as a deletion vector")
+    val (reads, readJobs) = jobsDuring(Seq(
+      CommitLog.readLatest(spark, root).get,
+      CommitLog.readVersion(spark, root, 2L).get,
+      CommitLog.changesSince(spark, root, 1L).get))
+    assert(readJobs == 0, s"building the reads launched $readJobs jobs")
+    assert(reads(0).count() == 39L && reads(1).count() == 40L)
+    // reference costs, measured in this session: the delta's own write,
+    // and one grouped min/max query over the written files
+    val delta = batch(100)
+    val scratch = freshRoot() + "/w"
+    val (_, writeJobs) = jobsDuring(delta.write.parquet(scratch))
+    val (_, statsJobs) = jobsDuring(spark.read.schema(delta.schema)
+      .parquet(scratch).groupBy(col("_metadata.file_name"))
+      .agg(min("id"), max("id")).collect())
+    val (_, appendJobs) = jobsDuring(CommitLog.commitAppend(spark, root, "w",
+      "append", statsCol = Some("id"))(delta))
+    assert(appendJobs <= writeJobs + statsJobs,
+      s"append launched $appendJobs jobs; write $writeJobs + stats $statsJobs")
+  }
 }

@@ -1034,4 +1034,36 @@ class OperatorSpec extends SparkSpec {
       assert(r(3).isInstanceOf[Boolean])
     }
   }
+
+  test("fanOut: a connector frame Spark cannot size falls back to its file count") {
+    import spark.implicits._
+    def withConf[T](k: String, v: String)(body: => T): T = {
+      val prev = spark.conf.getOption(k)
+      spark.conf.set(k, v)
+      try body
+      finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-fan").toString
+    Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("term", "doc_id")
+      .write.format("graft.index").option("dir", dir).mode("overwrite").save()
+    val idx = spark.read.format("graft.index").option("dir", dir).load()
+    def fans(df: org.apache.spark.sql.DataFrame) = !(Tables.fanOut(df) eq df)
+    // a DSv2 frame lists no input files, so only its size can veto
+    assert(idx.inputFiles.isEmpty)
+    val bytes = idx.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(fans(idx), "a small known size leaves the scan under-parallelized")
+    withConf("spark.sql.files.maxPartitionBytes", "1") {
+      assert(!fans(idx), "a known size spanning enough splits vetoes")
+      // the same size read as Spark's unknown-size marker must not veto
+      withConf("spark.sql.defaultSizeInBytes", bytes.toString) {
+        assert(fans(idx))
+        assert(!(Tables.fanOutBy(idx, col("term")) eq idx))
+      }
+    }
+    // parquet scans keep their decisions: a one-file testdata scan fans
+    // out, and its known size still vetoes once it spans enough splits
+    val li = Tables.lineitem(spark, sf)
+    assert(fans(li))
+    withConf("spark.sql.files.maxPartitionBytes", "1") { assert(!fans(li)) }
+  }
 }
